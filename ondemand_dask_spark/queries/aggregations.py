@@ -30,8 +30,9 @@ from ondemand_dask_spark.registry import register
 _R = 4
 
 # Checkpoint lifecycle for stat_spearman_corr's two pinned range
-# exchanges (operators/rank.py): retained past the call, released at
-# the next entry — same discipline as dedup/graph.
+# exchanges (operators/rank.py) and the ranged quantile path's pin
+# (agg_groupby_quantile, agg_winsorize): retained past the call,
+# released at the next entry — same discipline as dedup/graph.
 _CACHES = RetainedCaches()
 
 
@@ -401,6 +402,7 @@ def agg_groupby_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     `agg_quantile_approx`."""
     from ondemand_dask_spark.operators.quantile import exact_group_quantiles_auto
 
+    _CACHES.evict()
     li = load_table(spark, sf_dir, "lineitem")
     qdf = exact_group_quantiles_auto(
         li, ["l_returnflag"], "l_extendedprice",
@@ -1402,6 +1404,7 @@ def agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     before/after means as the audit summary."""
     from ondemand_dask_spark.operators.quantile import exact_group_quantiles_auto
 
+    _CACHES.evict()
     li = load_table(spark, sf_dir, "lineitem")
     # r15: hint dropped with agg_groupby_quantile's — the probe picks
     # sort at the bench SFs and the ranged path past the ~1M-row

@@ -15,6 +15,15 @@ engine depends on, so no query module can forget them:
   broadcast-join conversion, skew-join splitting, partition
   coalescing — the levers that make the same declarative plan hold
   from sf0.001 up to 100 TB without per-query tuning.
+- `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`:
+  Spark 4.1 defaults it to false, which keeps every `.cache()`d /
+  `.persist()`ed frame at all `spark.sql.shuffle.partitions` — AQE
+  never coalesces a cached plan's final stage, so each downstream
+  scan of a tiny cached frame fans out into 32 near-empty tasks.
+  With it on, cached plans coalesce like uncached ones.  Measured on
+  `dedup_cc_star_contraction` (minhash frames cached per stage;
+  sf0.01, local[4] on a 4-core Xeon VM, median of 3 warm reps, query
+  plus noop write): 1,042 → 110 tasks, 5.1 → 3.4 s.
 
 `shuffle_partitions` defaults to the parallelism of the master; at
 real cluster scale the caller passes cores*executors*2-3 (or relies
@@ -26,6 +35,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _parallelism_first() -> str:
+    """`SPARK_GRAFT_PARALLELISM_FIRST`, validated: only true/false
+    (any case) reach the conf, anything else fails here by name
+    rather than as an opaque Spark parse error at session build."""
+    raw = os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true")
+    v = raw.strip().lower()
+    if v not in ("true", "false"):
+        raise ValueError(
+            f"SPARK_GRAFT_PARALLELISM_FIRST must be 'true' or 'false', got {raw!r}"
+        )
+    return v
 
 
 def build_session(
@@ -72,8 +94,10 @@ def build_session(
         # exactly Spark's documented intent for this flag.
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
+            _parallelism_first(),
         )
+        # AQE may coalesce cached plans too (module docstring).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Dimension tables (region/nation/supplier/part) are tiny at
         # every SF; raise the auto-broadcast threshold so they always
@@ -106,6 +130,7 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.adaptive.enabled": "true",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     }
     for k, v in runtime.items():
         try:

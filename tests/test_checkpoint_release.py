@@ -9,6 +9,9 @@ in getRDDStorageInfo.
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from ondemand_dask_spark.operators.checkpoint import release_local_checkpoint
@@ -79,3 +82,30 @@ def test_module_caches_use_release_aware_eviction():
 
     for mod in (dedup, graph, text, composed):
         assert isinstance(mod._CACHES, RetainedCaches), mod.__name__
+
+
+@pytest.mark.parametrize("query", ["agg_groupby_quantile", "agg_winsorize"])
+def test_ranged_quantile_queries_release_previous_call(
+    spark, sf_dir, monkeypatch, query
+):
+    """Both retaining quantile queries evict at entry: on the ranged
+    path (forced here; it fires past ~1M rows per group) two
+    consecutive calls leave at most one call's pinned blocks."""
+    import ondemand_dask_spark.operators.quantile as quantile
+    import ondemand_dask_spark.queries.aggregations as aggs
+
+    monkeypatch.setattr(quantile, "choose_quantile_path", lambda *a, **k: "ranged")
+    fn = getattr(aggs, query)
+    before = _cached_rdd_ids(spark)
+    fn(spark, sf_dir).collect()
+    first = _cached_rdd_ids(spark) - before
+    assert first, "the ranged path should pin storage blocks"
+    fn(spark, sf_dir).collect()
+    deadline = time.monotonic() + 10
+    while first & _cached_rdd_ids(spark) and time.monotonic() < deadline:
+        time.sleep(0.1)  # checkpoint release is non-blocking
+    assert not (first & _cached_rdd_ids(spark)), (
+        f"{query} left the previous call's blocks pinned"
+    )
+    assert _cached_rdd_ids(spark) - before, "the latest call's pin stays"
+    aggs._CACHES.evict()
