@@ -187,7 +187,11 @@ def _sym(edges: DataFrame) -> DataFrame:
 # frame is counted and a |V| above the bound raises instead of
 # attempting a broadcast that would OOM the driver.  Production runs
 # pay nothing (the check is off by default; Spark's own 8 GB /
-# 512M-row broadcast cap remains the hard backstop).
+# 512M-row broadcast cap remains the hard backstop).  Armed, the
+# check is O(iters²) in the iterative loops (pagerank, LPA, PPR):
+# their per-round vectors are not pinned, so round k's `df.count()`
+# recomputes the lineage from round 1.  Acceptable for a test-only
+# mode; pin a per-round frame first if the armed path ever matters.
 _BROADCAST_V_BOUND = 100_000_000
 
 

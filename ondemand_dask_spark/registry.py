@@ -96,65 +96,63 @@ def certificate_queries() -> frozenset[str]:
 # module happens to import first.  Everything not listed follows in
 # registration order.
 _SHOWCASE: tuple[str, ...] = (
-    # --- round-15 rotation (generated by tools/rotation.py; the
-    # worklist lives in ROTATION.md and is guard-tested against
-    # CORRECTNESS history).  r14 went 50 full, 0 rows-only, 0
-    # failures - the tenth consecutive clean window.  This window:
-    # zero new registrations (r15 is the second optimization
-    # round - no new query semantics), so all 50 slots re-green
-    # the LEAST-recently-driver-checked queries.  Rows-only twin
-    # adjacency stays derived from the registry `twin` annotation
-    # inside tools/rotation.py.
-    "set_union_schema_evolution",
-    "source_orc_roundtrip",
-    "stat_bootstrap_ci",
-    "stat_kll_quantile_banded",
-    "stat_mann_whitney",
-    "stat_theil_sen_slope",
-    "stat_theta_intersection_banded",
-    "str_predicates",
-    "stream_cdc_upsert",
-    "stream_stream_join",
-    "text_bigram_perplexity",
-    "text_tfidf_cosine_pairs",
-    "udf_cogroup",
-    "udf_map_overlap",
-    "udf_table_function",
-    "window_autocorr_lag1",
-    "window_lag_lead",
-    "agg_hhi_concentration",
-    "array_hof",
-    "dedup_duplicate_spans",
-    "dedup_ngram_containment",
-    "dedup_priority_keep",
-    "dedup_semantic_embedding",
-    "dq_psi_drift",
-    "dq_referential_integrity",
-    "embedding_matryoshka_recall",
-    "events_attribution_last_touch",
-    "events_bot_regularity",
-    "events_markov_transitions",
-    "events_rfm_segmentation",
-    "feature_target_encode_cv",
-    "graph_modularity",
-    "incremental_partial_agg_merge",
-    "join_set_similarity",
-    "math_transcendental",
-    "multimodal_binary_meta",
-    "na_drop",
-    "orders_pareto_concentration",
-    "pipeline_length_bucket_batching",
-    "pipeline_purge_audit",
-    "proj_assign",
-    "sample_n_per_group",
-    "scd2_pit_lookup",
-    "set_union_all",
-    "sort_global_rank_scalable",
-    "source_csv_corrupt_permissive",
-    "source_parquet_merge_schema",
-    "source_python_datasource",
-    "stat_anova_oneway",
-    "stat_spearman_corr",
+    # --- rotation over the census through CORRECTNESS_r15.json
+    # (generated by tools/rotation.py; the worklist lives in
+    # ROTATION.md and is guard-tested against CORRECTNESS history).
+    # Zero new registrations and no query semantics changed, so all
+    # 50 slots re-green the LEAST-recently-driver-checked queries.
+    # Rows-only twin adjacency stays derived from the registry
+    # `twin` annotation inside tools/rotation.py.
+    "str_replace_extract",
+    "stream_static_join",
+    "text_bm25_topk",
+    "udf_apply_in_pandas",
+    "window_gap_detection",
+    "window_max_drawdown",
+    "agg_count_min_estimate",
+    "agg_groupby_basic",
+    "agg_groupby_quantile",
+    "agg_mode",
+    "agg_salted_skew",
+    "agg_weighted_median",
+    "ann_ivf_probe",
+    "ann_lsh_bucket_stats",
+    "combine_first",
+    "concat_axis1",
+    "dedup_incremental_batch",
+    "encode_cyclic_time",
+    "feature_woe_iv",
+    "graph_bfs_khop",
+    "jdbc_source_plan",
+    "join_bloom_prefilter",
+    "join_fuzzy_entity_resolution",
+    "join_inner",
+    "layout_file_skipping_stats",
+    "layout_zorder_key",
+    "ml_calibration_bins",
+    "ml_eval_logloss",
+    "ml_eval_multiclass",
+    "ml_eval_regression",
+    "multimodal_decode_ppm",
+    "multimodal_image_ahash",
+    "pipeline_chunk_overlap",
+    "pipeline_end_to_end",
+    "pipeline_leakage_free_split",
+    "sample_weighted_reservoir",
+    "set_except",
+    "set_except_all",
+    "snapshot_diff_cdc",
+    "source_from_pandas",
+    "sql_recursive_hierarchy_rollup",
+    "stat_cuped_adjustment",
+    "stat_fdr_bh",
+    "stat_ols_by_group",
+    "str_edit_distance",
+    "stream_foreachbatch_sink",
+    "stream_sliding_agg",
+    "text_lang_id",
+    "tpch_q3",
+    "ts_changepoint_binary",
 )
 
 

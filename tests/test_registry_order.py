@@ -34,12 +34,12 @@ def test_showcase_front_is_new_then_changed_then_stale():
        every green driver row has bounded age.
     """
     window = list(_SHOWCASE)
-    # r15 (second optimization round): zero new registrations and
-    # zero semantics changes, so the window is again 50 pure-LRU
-    # re-certification slots — the front IS the LRU fill (guarded in
-    # full by test_showcase_stale_fill_matches_committed_census
-    # below, with an empty front set).
-    assert window[0] == "set_union_schema_evolution"
+    # Census through r15: zero new registrations and zero semantics
+    # changes, so the window is again 50 pure-LRU re-certification
+    # slots — the front IS the LRU fill (guarded in full by
+    # test_showcase_stale_fill_matches_committed_census below, with
+    # an empty front set).
+    assert window[0] == "str_replace_extract"
 
 
 def test_showcase_stale_fill_matches_committed_census():
